@@ -89,7 +89,6 @@ object VectorAggregates {
 
   /** Top-k as a `Column`: array<struct<cos, cand_id>> ordered best-first. */
   def topKOf(k: Int, cos: Column, candId: Column): Column = {
-    implicit val enc: Encoder[ScoredCand] = Encoders.product[ScoredCand]
     udaf(new TopKAgg(k)).apply(cos, candId)
   }
 
@@ -150,7 +149,6 @@ object VectorAggregates {
 
   /** Bottom-k distinct as a `Column`: array<long> ascending. */
   def bottomKDistinctOf(k: Int, v: Column): Column = {
-    implicit val enc: Encoder[Long] = Encoders.scalaLong
     udaf(new BottomKDistinctAgg(k)).apply(v)
   }
 

@@ -3,7 +3,6 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
-import graft.core.Determinism.xhashSql
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * group-by), MinHash+LSH, SimHash, and character-n-gram Jaccard.

@@ -355,10 +355,7 @@ object AnalyticsOps {
     // layout exchange — BFS's union+min agg cannot reuse a layout):
     // per-order part sets from ONE |lineitem|-key agg, ordered pairs
     // generated in-row, dedup's exchange is the only edge shuffle.
-    val e = li.groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("ps"))
-      .select(explode(col("ps")).as("src"), col("ps"))
-      .select(col("src"), explode(col("ps")).as("dst"))
+    val e = ScaleOps.basketPairs(ScaleOps.orderBaskets(li), "src", "dst")
       .filter(col("src") =!= col("dst"))
       .dropDuplicates("src", "dst")
       .transform(graft.core.EngineCache.persisted)

@@ -208,7 +208,6 @@ object CorpusOps {
     * persist the explode join and the token-count scan each run twice. */
   def bm25Search(spark: SparkSession, dir: String): DataFrame = {
     docs(spark, dir).createOrReplaceTempView("documents")
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     spark.sql(s"""
       WITH qt AS (SELECT * FROM VALUES $bm25ValuesSql AS t(query_id, term)),
       uni AS (

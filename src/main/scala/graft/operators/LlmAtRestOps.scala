@@ -3,10 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Determinism._
-import graft.core.Tables
-import graft.functions.{GraftFunctions, TextFunctions}
+import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
-import graft.llm.{Dedup, Multimodal, Packing, Similarity}
+import graft.llm.{Dedup, Similarity}
 
 /** The incremental at-rest state family plus tokenizer training, split
   * from [[LlmQueries]] (its `queries`/`oracleSql` maps remain the

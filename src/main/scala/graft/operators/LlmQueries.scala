@@ -6,7 +6,7 @@ import graft.core.Determinism._
 import graft.core.Tables
 import graft.functions.{GraftFunctions, TextFunctions}
 import graft.functions.TextFunctions._
-import graft.llm.{Dedup, Multimodal, Packing, Similarity}
+import graft.llm.{Dedup, Packing, Similarity}
 
 
 /** The LLM-training-data operator inventory as driver-checkable queries:

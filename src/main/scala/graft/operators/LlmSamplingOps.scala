@@ -3,10 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Determinism._
-import graft.core.Tables
-import graft.functions.{GraftFunctions, TextFunctions}
+import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
-import graft.llm.{Dedup, Multimodal, Packing, Similarity}
+import graft.llm.{Dedup, Multimodal, Similarity}
 
 /** The sampling / retrieval / multimodal family, split from
   * [[LlmQueries]]: skip-gram generation (q186), the blocking audit and
@@ -468,26 +467,27 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
   /** [[cdcChunks]] over an arbitrary (doc_id, text) frame — the spec
     * entry point for shift-robustness (edit a doc, most fps survive).
     *
-    * Shape (guide §2.3/§2.4, measured in ScratchTiming `cdc2`): the
-    * boundary hash runs on EXPLODED rows — whole-stage-codegen md5, the
-    * hot path — and the per-doc chunking happens on ONE packed row per
-    * doc: a single aggregate collects the boundary positions (a few
-    * ints per doc) and carries the words array via first(), then the
-    * chunks materialize as an in-row array<struct> (slice between
-    * consecutive starts), so the corpus crosses exactly ONE exchange,
-    * packed. The old spelling paid a corpus-token Exchange+Sort+
-    * WindowExec for the running boundary sum plus a SECOND exploded
-    * corpus-token Exchange for the (doc_id, chunk_id) group with a
-    * collect_list+array_sort reassembly. Rejected alternatives, same
-    * harness: computing the per-token hash inside an array lambda
-    * (transform) is 5-6x slower — higher-order-function lambdas
-    * evaluate interpreted, never whole-stage-codegen — and building
-    * chunk structs per exploded start (words re-carried per chunk row)
-    * is quadratic in doc length. chunk_id equivalence: the old running
-    * sum(is_b) at position p counts boundaries ≤ p, which is exactly
-    * the chunk's index in the starts array; token order inside a chunk
-    * is array order, which IS the i-order the old group reassembled,
-    * so chunk_fp hashes the identical string. */
+    * Shape (guide §2.3/§2.4, measured in OPTIMIZATION_r14.md "q152
+    * cdc_chunks"): the boundary hash runs on EXPLODED rows —
+    * whole-stage-codegen md5, the hot path — and the per-doc chunking
+    * happens on ONE packed row per doc: a single aggregate collects
+    * the boundary positions (a few ints per doc) and carries the
+    * words array via first(), then the chunks materialize as an
+    * in-row array<struct> (slice between consecutive starts), so the
+    * corpus crosses exactly ONE exchange, packed. The old spelling
+    * paid a corpus-token Exchange+Sort+WindowExec for the running
+    * boundary sum plus a SECOND exploded corpus-token Exchange for
+    * the (doc_id, chunk_id) group with a collect_list+array_sort
+    * reassembly. Rejected alternatives, same record: computing the
+    * per-token hash inside an array lambda (transform) is 5-6x slower
+    * — higher-order-function lambdas evaluate interpreted, never
+    * whole-stage-codegen — and building chunk structs per exploded
+    * start (words re-carried per chunk row) is quadratic in doc
+    * length. chunk_id equivalence: the old running sum(is_b) at
+    * position p counts boundaries ≤ p, which is exactly the chunk's
+    * index in the starts array; token order inside a chunk is array
+    * order, which IS the i-order the old group reassembled, so
+    * chunk_fp hashes the identical string. */
   def cdcChunksOf(docsDf: DataFrame): DataFrame = {
     val spark = docsDf.sparkSession
     val view = s"graft_cdc_docs_t${Thread.currentThread().getId}"

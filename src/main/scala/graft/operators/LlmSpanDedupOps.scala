@@ -3,10 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Determinism._
-import graft.core.Tables
-import graft.functions.{GraftFunctions, TextFunctions}
 import graft.functions.TextFunctions._
-import graft.llm.{Dedup, Multimodal, Packing, Similarity}
 
 /** The span-dedup and corpus-cut family, split from [[LlmQueries]]:
   * curriculum order and per-source impact (q165/q160), the Lee et al.

@@ -1,10 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, lit, max, min, row_number, sum}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, lit, max, row_number, sum}
 import graft.core.Determinism._
 import graft.core.Tables
-import graft.functions.TextFunctions._
 
 /** SRP-LSH band geometry for the NSW skeleton: `bands` keys of
   * `bitsPerBand` bits each, packed into ONE 64-bit `srp_sig` word
@@ -115,7 +114,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     sub AS (
       SELECT vec_id, m, slice(embedding, m * $sub + 1, $sub) AS v
       FROM embeddings CROSS JOIN ms)"""
-  private[operators] def pqSubSql: String = pqSubSqlP(PqM, PqSub)
 
   /** The Lloyd codebook, built ROUND BY ROUND with a driver-side
     * materialization barrier between iterations.
@@ -1271,8 +1269,9 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * per-vector projection s is an in-scan array reduction, and the
     * only exchange is the 64-row gradient aggregate (the exploded
     * spelling shuffled the corpus twice per round: s's GROUP BY vec_id
-    * and the xc ⋈ s join — same-JVM A/B `SCRATCH_WHAT=pca2`: rounds
-    * 1.58/0.63/0.54 s → 0.72/0.31/0.31 s, g bit-equal). The 64-row
+    * and the xc ⋈ s join — same-JVM A/B in OPTIMIZATION_r14.md "q181
+    * emb_pca2": rounds 1.58/0.63/0.54 s → 0.72/0.31/0.31 s, g
+    * bit-equal). The 64-row
     * gradient COLLECTS and re-registers as a local relation — the
     * q84/PQ-codebook materialization barrier; normalize then runs over
     * that local frame with the exact oracle expressions, so every
@@ -1349,10 +1348,10 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     // aliased 64-element decimal reduction into the transform lambda
     // (one syntactic use), and the lambda then re-evaluates the whole
     // dot PER OUTPUT ELEMENT — a 64× per-row blowup measured at 17.8 s
-    // of q181's 24 s sf1 wall (SCRATCH_WHAT=pca5). The persist boundary
-    // computes s once per row while cache-filling; the optimizer does
-    // not collapse across an InMemoryRelation. Same expressions, same
-    // bits — only the evaluation count changes.
+    // of q181's 24 s sf1 wall (OPTIMIZATION_r14.md "q181 emb_pca2"). The
+    // persist boundary computes s once per row while cache-filling; the
+    // optimizer does not collapse across an InMemoryRelation. Same
+    // expressions, same bits — only the evaluation count changes.
     val sB = spark.sql(
       s"SELECT vec_id, xc, ${packedDotSql("xc", vALit, "1e12")} AS s " +
         s"FROM $xp")
@@ -1649,7 +1648,7 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     val hasTombstoned = !graft.core.Warehouse.readTable(spark, table)
       .filter(s"vec_id % $AnnDelMod = $AnnDelRem").isEmpty
     if (hasTombstoned) {
-      import org.apache.spark.sql.functions.{broadcast, col}
+      import org.apache.spark.sql.functions.broadcast
       val tomb = spark.sql(s"""SELECT vec_id FROM embeddings
         WHERE vec_id % $AnnDelMod = $AnnDelRem""")
       val purged = graft.core.Warehouse.readTable(spark, table)
@@ -2862,7 +2861,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * probes × corpus scan for the truth set; the walk itself reuses
     * the at-rest graph. */
   def nswRecall(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val vecs = Tables.load(spark, dir, "embeddings")
     val walk = nswSearchOf(vecs, nswGraphAtRest(spark, dir), NswProbeWhere)
     val truth = graft.llm.Similarity.bruteForceTopK(
@@ -2909,8 +2907,7 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * stability of both stored artifacts. */
   val NswBatchMod = 3
 
-  private def srpBandKeys(sigCol: String,
-      geom: NswGeometry = NswGeometry.frozen): Seq[String] = {
+  private def srpBandKeys(sigCol: String, geom: NswGeometry): Seq[String] = {
     val rows = geom.bitsPerBand
     val mask = (1L << rows) - 1
     (0 until geom.bands).map { b =>
@@ -2918,9 +2915,9 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     }
   }
 
-  /** (vec_id, sig) for an arbitrary embedding frame. Exposed to the
-    * geometry tooling ([[graft.ProfileNsw]]) so at-rest artifacts and
-    * verbs sign under the SAME geometry word. */
+  /** (vec_id, sig) for an arbitrary embedding frame. Shared by the
+    * at-rest artifacts, the verbs and the geometry spec (ScaleOpsSpec
+    * "nsw band geometry") so all sign under the SAME geometry word. */
   private[graft] def nswSigsOf(vectors: DataFrame,
       geom: NswGeometry = NswGeometry.frozen): DataFrame = {
     graft.functions.GraftFunctions.register(vectors.sparkSession)

@@ -11,6 +11,52 @@ import graft.functions.TextFunctions._
   * persist barriers (q104) and HITS (q149). */
 private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
 
+  /** Per-order part baskets over (l_orderkey, l_partkey), the shared
+    * build of the co-purchase family (r14, guide §2.3 "shuffle keys,
+    * not payloads"): one hash agg collapses lineitem to per-order part
+    * SETS, shuffling |lineitem| keys once with map-side partial
+    * aggregation. `collect_set` dedups within the order, so a
+    * duplicated (order, part) row counts once, as under a global
+    * distinct. Read out with [[basketPairs]]. */
+  private[graft] def orderBaskets(li: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    li.groupBy(col("l_orderkey"))
+      .agg(collect_set(col("l_partkey")).as("ps"))
+  }
+
+  /** Every ordered part pair (a, b) inside each basket, generated
+    * IN-ROW (two Generates, no join), diagonal (a = b) included. Each
+    * order yields each pair once, so a count per pair is the number of
+    * orders containing both parts. Callers pick the half they need
+    * (`=!=` for symmetric edges, `<` for canonical ones). Equality with
+    * the self-join spelling (`a.l_orderkey = b.l_orderkey AND
+    * a.l_partkey < b.l_partkey`, then distinct) is asserted in
+    * ScaleOpsSpec. */
+  private[graft] def basketPairs(baskets: DataFrame, a: String,
+                                 b: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    baskets.select(explode(col("ps")).as(a), col("ps"))
+      .select(col(a), explode(col("ps")).as(b))
+  }
+
+  /** Symmetric co-purchase edge list over (l_orderkey, l_partkey) —
+    * both directions of every distinct same-order part pair — built
+    * basket-packed ([[orderBaskets]] / [[basketPairs]]), then ONE
+    * exchange on the caller's layout key lands the rows where the
+    * iteration aggregates need them; dropDuplicates(src, dst) then runs
+    * in place because hash(layout) already clusters equal (src, dst)
+    * rows (the subset rule). Old spelling: self-join + distinct
+    * exchange + union + repartition exchange (3 exchanges, join fan-out
+    * shuffled twice). Edge SETS are identical (OPTIMIZATION_r14.md
+    * "Batch 2" records the A/B; ScaleOpsSpec asserts it). */
+  private[graft] def coPurchaseEdges(li: DataFrame, layout: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    basketPairs(orderBaskets(li), "src", "dst")
+      .filter(col("src") =!= col("dst"))
+      .repartition(col(layout))
+      .dropDuplicates("src", "dst")
+  }
+
   /** Broadcast an O(|V|)-row iteration-state frame ONLY when it is
     * provably small (guide §3.1: explicit broadcast when you KNOW the
     * side fits; never an unconditional hint). `n` is the exact row
@@ -22,31 +68,6 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     * runtime SMJ→BHJ rewrite still pays the planned shuffles, while a
     * plan-time broadcast never shuffles either side). At 10¹⁰ nodes it
     * degrades to the plain shuffled join unchanged. */
-  /** Symmetric co-purchase edge list over (l_orderkey, l_partkey) —
-    * both directions of every distinct same-order part pair — built
-    * basket-packed (r14, guide §2.3 "shuffle keys, not payloads" /
-    * §2.4): one hash agg collapses lineitem to per-order part SETS
-    * (shuffling |lineitem| keys once, where the old self-join shuffled
-    * both join inputs), the ordered pairs generate IN-ROW from each
-    * basket (two Generates, no join), and ONE exchange on the caller's
-    * layout key lands the rows where the iteration aggregates need
-    * them; dropDuplicates(src, dst) then runs in place because
-    * hash(layout) already clusters equal (src, dst) rows (the subset
-    * rule). Old spelling: self-join + distinct exchange + union +
-    * repartition exchange (3 exchanges, join fan-out shuffled twice).
-    * Edge SETS are identical (A/B: except() both ways = 0 over the
-    * fixture; ScratchTiming `edges2` is the measurement record). */
-  private[graft] def coPurchaseEdges(li: DataFrame, layout: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    li.groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("ps"))
-      .select(explode(col("ps")).as("src"), col("ps"))
-      .select(col("src"), explode(col("ps")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col(layout))
-      .dropDuplicates("src", "dst")
-  }
-
   private[graft] def bcastIfSmall(df: DataFrame, n: Long): DataFrame = {
     val thr = try df.sparkSession.conf
       .get("spark.sql.autoBroadcastJoinThreshold", "10485760").toLong
@@ -245,7 +266,6 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     * materialization action and the |V| the teleport term needs. */
   def pageRank(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.storage.StorageLevel
     val li = Tables.load(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"))
     // r13 batch 3: cache the edges ALREADY hash-partitioned by dst.

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Determinism._
-import graft.core.Tables
 import graft.functions.TextFunctions._
 
 

@@ -222,31 +222,26 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
     SELECT pa, pb, CAST(sup_ab AS BIGINT) AS sup_ab, conf, lift FROM scored
     ORDER BY lift DESC, pa, pb LIMIT $RulesTopK"""
 
-  /** Spark side persists one per-order basket frame (r14, the
-    * [[supportedEdgesOf]] basket-pack, guide §2.3): collect_set
-    * collapses lineitem to per-order part SETS behind a single
-    * corpus-keyed exchange — the old spelling's repartition+distinct
+  /** Spark side persists one per-order basket frame (r14,
+    * [[orderBaskets]], guide §2.3): collect_set collapses lineitem to
+    * per-order part SETS behind a single corpus-keyed exchange — the old spelling's repartition+distinct
     * cache, order-count distinct, and pair self-join all derive from
     * it without further corpus movement. nOrders is the basket count
     * (same distinct-orderkey set), item supports explode the baskets
     * (a part appears once per order either way), and pair supports
-    * generate the ordered pairs IN-ROW (each order contributes each
+    * read the ordered pairs IN-ROW ([[basketPairs]]; each order contributes each
     * unordered pair at most once in both spellings, so count(1) per
     * (pa, pb) is the co-occurring-order count unchanged). Scoring tail
     * identical to [[assocRulesSql]], so the oracle hash holds. */
   def assocRules(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val baskets = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("ps"))
+    val baskets = orderBaskets(Tables.load(spark, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_partkey")))
       .transform(graft.core.EngineCache.persisted)
     val nOrders = baskets.count()
     val item = baskets.select(explode(col("ps")).as("l_partkey"))
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("sup"))
-    val pair = baskets
-      .select(explode(col("ps")).as("pa"), col("ps"))
-      .select(col("pa"), explode(col("ps")).as("pb"))
+    val pair = basketPairs(baskets, "pa", "pb")
       .filter(col("pa") < col("pb"))
       .groupBy("pa", "pb").agg(count(lit(1)).as("sup_ab"))
       .filter(col("sup_ab") >= MinSupport)
@@ -351,25 +346,17 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
 
   /** Shared support-filtered canonical edge list (u < v, ≥
     * [[TriMinSup]] co-occurring orders) — built basket-packed (r14,
-    * guide §2.3 "shuffle keys, not payloads": the coPurchaseEdges
-    * precedent from the unweighted graph family): one hash agg
-    * collapses lineitem to per-order part SETS (collect_set dedups
-    * within the order, so the old global distinct is subsumed;
-    * |lineitem| keys cross the only corpus-keyed exchange with
-    * map-side partial aggregation), ordered pairs generate IN-ROW
-    * from each basket (two Generates, no join), and the support
-    * count's own (u, v) exchange — map-side combinable — is the only
-    * other movement. The old spelling shuffled the distinct, both
-    * self-join inputs, and the join fan-out. Counts are identical:
-    * each order contributes each unordered pair at most once either
-    * way, so count(1) per (u, v) is the number of orders containing
-    * both parts in both spellings. */
-  private[operators] def supportedEdgesOf(li: DataFrame): DataFrame = {
+    * [[orderBaskets]] / [[basketPairs]], the unweighted graph family's
+    * build): the support count's own (u, v) exchange — map-side
+    * combinable — is the only movement after the basket agg. The old
+    * spelling shuffled a global distinct, both self-join inputs, and
+    * the join fan-out. Counts are identical: each order contributes
+    * each unordered pair at most once either way, so count(1) per
+    * (u, v) is the number of orders containing both parts in both
+    * spellings. */
+  private[graft] def supportedEdgesOf(li: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    li.groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("ps"))
-      .select(explode(col("ps")).as("u"), col("ps"))
-      .select(col("u"), explode(col("ps")).as("v"))
+    basketPairs(orderBaskets(li), "u", "v")
       .filter(col("u") < col("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("c"))
       .filter(col("c") >= TriMinSup)

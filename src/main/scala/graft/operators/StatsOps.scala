@@ -100,29 +100,6 @@ object StatsOps {
   }
 
   // ---------------------------------------------------------------- q128
-  /** Winsorized + trimmed means per group at [p10, p90]: the robust
-    * location estimates an outlier-laden 100 TB corpus actually needs
-    * (a single fat-fingered value moves a plain mean arbitrarily; it
-    * moves these not at all). Spark side feeds `percentile(v, p, freq)`
-    * from the (group, value) histogram — the sort-agg sees
-    * ~|groups|·|distinct| rows, never the corpus (q46's move) — then
-    * clips/filters against the half-up-integerized bounds so every
-    * subsequent sum is exact int64. The oracle computes the same bounds
-    * with `quantile_cont` over raw rows (same linear interpolation on
-    * identical integer inputs). */
-  def winsorSpark: String = s"""
-    WITH h AS (
-      SELECT l_returnflag AS flag,
-        CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS c,
-        count(1) AS cnt
-      FROM lineitem GROUP BY l_returnflag, floor(l_extendedprice * 100 + 0.5)),
-    q AS (
-      SELECT flag,
-        CAST(floor(percentile(c, 0.1, cnt) + 0.5) AS BIGINT) AS lo,
-        CAST(floor(percentile(c, 0.9, cnt) + 0.5) AS BIGINT) AS hi
-      FROM h GROUP BY flag),
-    ${winsorTail}"""
-
   def winsorOracle: String = s"""
     WITH r0 AS (
       SELECT l_returnflag AS flag,
@@ -156,14 +133,25 @@ object StatsOps {
       ${droundSql("CAST(tsum AS DOUBLE) / (100.0 * tn)", 4)} AS trim_mean
     FROM w ORDER BY flag"""
 
-  /** r13: the `h` histogram CTE is referenced by BOTH the percentile
+  /** Winsorized + trimmed means per group at [p10, p90]: the robust
+    * location estimates an outlier-laden 100 TB corpus actually needs
+    * (a single fat-fingered value moves a plain mean arbitrarily; it
+    * moves these not at all). Spark side feeds `percentile(v, p, freq)`
+    * from the (group, value) histogram — the sort-agg sees
+    * ~|groups|·|distinct| rows, never the corpus (q46's move) — then
+    * clips/filters against the half-up-integerized bounds so every
+    * subsequent sum is exact int64. The oracle computes the same bounds
+    * with `quantile_cont` over raw rows (same linear interpolation on
+    * identical integer inputs).
+    *
+    * r13: the `h` histogram CTE is referenced by BOTH the percentile
     * branch (`q`) and the clip/trim branch (`w`); Spark inlines CTEs,
-    * so [[winsorSpark]] scanned lineitem and rebuilt the (flag, c)
-    * hash aggregate TWICE (plan-verified: two parquet scans + two
-    * Exchange/HashAggregate pairs). Materialize `h` once behind a
-    * per-call temp view and run the identical `q`/`w`/tail arithmetic
-    * against the cache — same expressions, one scan (guide §1.2).
-    * The oracle ([[winsorOracle]]) is untouched. */
+    * so the earlier single-statement spelling scanned lineitem and
+    * rebuilt the (flag, c) hash aggregate TWICE (plan-verified: two
+    * parquet scans + two Exchange/HashAggregate pairs). Materialize `h`
+    * once behind a per-call temp view and run the identical `q`/`w`/tail
+    * arithmetic against the cache — same expressions, one scan (guide
+    * §1.2). The oracle ([[winsorOracle]]) is untouched. */
   def winsorMeans(spark: SparkSession, dir: String): DataFrame = {
     Tables.load(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
     val h = graft.core.EngineCache.persisted(spark.sql(s"""

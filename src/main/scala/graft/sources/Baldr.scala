@@ -173,7 +173,7 @@ object Baldr {
         files.flatMap { f =>
           val (topic, part, first) = f.getString(0) match {
             case KeyRe(t, p, o) => (t, p.toInt, o.toLong)
-            case other => ("_unparsed", -1, -1L)
+            case _ => ("_unparsed", -1, -1L)
           }
           val decoded = scala.collection.mutable.ArrayBuffer.empty[Row]
           var seq = 0L

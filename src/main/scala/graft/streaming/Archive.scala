@@ -240,7 +240,7 @@ object Archive {
       catch {
         // NonFatal only: an OOM or interrupt must propagate, not trigger
         // a restart of a query in a possibly-corrupted JVM
-        case scala.util.control.NonFatal(e) if restarts < maxRestarts =>
+        case scala.util.control.NonFatal(_) if restarts < maxRestarts =>
           restarts += 1
           Thread.sleep(pauseMs)
       }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
@@ -26,25 +26,6 @@ object EventAnalytics {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Sliding window variant. */
-  def slidingCounts(events: DataFrame, watermark: String = "10 minutes",
-                    window_ : String = "10 minutes", slide: String = "5 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-
-  /** Session windows (gap-based) via the built-in session_window. */
-  def sessionCounts(events: DataFrame, watermark: String = "10 minutes",
-                    gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("sess_start"),
-        col("session_window.end").as("sess_end"), col("user_id"), col("n_events"))
 
   /** Per-window per-type distinct-user HLL sketches built AT STREAM TIME
     * — the ingest end of q135's sketch-at-rest lifecycle: the stream job

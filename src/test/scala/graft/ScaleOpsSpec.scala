@@ -356,6 +356,48 @@ class ScaleOpsSpec extends SparkSpec {
     assert(got == triCount.toMap)
   }
 
+  test("basket pairs equal the self-join spelling, counts included") {
+    val sq = spark
+    import sq.implicits._
+    // order 1 repeats part 20, order 3 is a single-part basket, and parts
+    // 10/20/30 each appear in several orders
+    val li = Seq(
+      (1L, 10L), (1L, 20L), (1L, 30L), (1L, 20L),
+      (2L, 20L), (2L, 30L),
+      (3L, 40L),
+      (4L, 10L), (4L, 30L), (4L, 20L),
+      (5L, 50L), (5L, 10L)).toDF("l_orderkey", "l_partkey")
+    li.createOrReplaceTempView("basket_li")
+    // the old spelling: distinct, then a same-order self-join per pair
+    def selfJoin(op: String) = spark.sql(s"""
+      WITH d AS (SELECT DISTINCT l_orderkey, l_partkey FROM basket_li)
+      SELECT a.l_partkey AS u, b.l_partkey AS v
+      FROM d a JOIN d b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey $op b.l_partkey""")
+    val pairs = ScaleOps.basketPairs(ScaleOps.orderBaskets(li), "u", "v")
+    // canonical (u < v) edges, then both directions (the q104 family)
+    val canon = pairs.filter(col("u") < col("v"))
+    val canonTruth = selfJoin("<").distinct()
+    assert(canon.except(canonTruth).isEmpty && canonTruth.except(canon).isEmpty)
+    val sym = ScaleOps.coPurchaseEdges(li, "src").toDF("u", "v")
+    val symTruth = selfJoin("<>").distinct()
+    assert(sym.except(symTruth).isEmpty && symTruth.except(sym).isEmpty)
+    assert(sym.count() == 2 * canonTruth.count())
+    // per-pair order counts (what supportedEdgesOf filters on): the
+    // duplicated row must not count order 1 twice
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("u", "v").count().collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val want = Map((10L, 20L) -> 2L, (10L, 30L) -> 2L, (20L, 30L) -> 3L,
+      (10L, 50L) -> 1L)
+    assert(counts(canon) === want)
+    assert(counts(selfJoin("<")) === want)
+    val supported = ScaleOps.supportedEdgesOf(li).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(supported === want.filter(_._2 >= ScaleOps.TriMinSup).keySet)
+    spark.catalog.dropTempView("basket_li")
+  }
+
   test("ab test arms partition all purchases and z is finite") {
     val r = ScaleOps.abTest(spark, sfDir).collect().head
     val total = graft.core.Tables.load(spark, sfDir, "events")
